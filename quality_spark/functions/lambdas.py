@@ -30,7 +30,7 @@ from __future__ import annotations
 import itertools
 from typing import Dict, Iterable, List, Optional, Tuple
 
-from ..expr import is_lambda, parse_lambda, replace_calls, substitute_identifiers
+from ..expr import is_lambda, parse_lambda, replace_calls, substitute_identifiers, tokenize
 from ..model import LambdaFunction
 from .macros import expand_builtin
 
@@ -178,7 +178,14 @@ def expand_sql(
                 return _expand_lambda_call(params, body, args)
         return None
 
-    return replace_calls(sql, expander, max_depth=max_depth)
+    expanded = replace_calls(sql, expander, max_depth=max_depth)
+    # comments go last, once: every encoder wraps the text in
+    # parentheses, and a trailing ``--`` comment would swallow the close
+    if "--" not in expanded and "/*" not in expanded:
+        return expanded
+    return "".join(
+        " " if t.kind == "comment" else t.text for t in tokenize(expanded)
+    )
 
 
 def _contains_registered_call(text: str, registry: LambdaRegistry) -> bool:

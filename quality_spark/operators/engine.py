@@ -18,18 +18,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..model import PASSED_INT, DEFAULT_SALIENCE, Rule, RuleSet, RuleSuite, pack_id
-from ..plans.compiler import expand_rules, probe_types, registry_for
-from ..plans.outputs import output_step_sql, parse_output
+from ..plans.compiler import registry_for
+from ..plans.outputs import parse_output
 from ..functions.lambdas import expand_sql
-from ..results import encode_rule_sql, encode_rule_sql_generic
-from .runner import _assemble, _lit_packed
+from .runner import _assemble, _bind, _encoded_sqls
 
 __all__ = ["rule_engine_runner", "add_rule_engine", "add_rule_engine_f", "rule_engine_with_struct"]
-
-
-# single source of truth for rule encoding — the engine/folder trigger
-# path encodes exactly like the runner
-from .runner import _encoded_sqls as _trigger_encs  # noqa: E402
 
 
 def _salience_ordered(
@@ -75,8 +69,19 @@ def rule_engine_runner(
     """Column of STRUCT<ruleSuiteResults, salientRule, result>
     (reference schema: impl/RuleEngineRunner.scala:395-399; debugMode
     wraps result in ARRAY<STRUCT<salience INT, result T>>,
-    :44-50)."""
-    enc_by_set = _trigger_encs(suite, df)
+    :44-50). Inlines each encoded rule, like ``rule_runner``;
+    :func:`add_rule_engine` evaluates each once."""
+    return _engine(suite, _encoded_sqls(suite, df), result_ddl, debug_mode)
+
+
+def _engine(
+    suite: RuleSuite,
+    enc_by_set: Sequence[Sequence[str]],
+    result_ddl: Optional[Union[str, T.DataType]],
+    debug_mode: bool,
+) -> Column:
+    """The engine struct over each rule's encoded SQL: inline text or a
+    staged column reference."""
     dq = _assemble(suite, enc_by_set, with_suite_overall=True)
 
     ordered = _salience_ordered(suite, enc_by_set)
@@ -170,8 +175,9 @@ def add_rule_engine(
 ) -> DataFrame:
     """df plus the rule-engine result column
     (reference: impl/util/AddDataFunctionsImports.scala ruleEngineWithStruct)."""
-    return df.select(
-        "*", rule_engine_runner(suite, result_ddl, df, debug_mode).alias(name)
+    return _bind(
+        df, _encoded_sqls(suite, df),
+        lambda refs: [_engine(suite, refs, result_ddl, debug_mode).alias(name)],
     )
 
 

@@ -18,7 +18,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..model import RuleSuite, pack_id
+from ..model import RuleSuite
 from ..plans.compiler import expand_rules, RuleCompilationError
 from .aggregates import (
     AggSite,

@@ -12,7 +12,7 @@ Narrow projection; no shuffle; streaming-safe.
 
 from __future__ import annotations
 
-from typing import List, Optional, Tuple, Union
+from typing import List, Optional, Sequence, Tuple, Union
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -22,8 +22,8 @@ from ..functions.lambdas import expand_sql
 from ..model import PASSED_INT, RuleSuite
 from ..plans.compiler import registry_for
 from ..plans.outputs import output_step_sql, parse_output
-from .engine import _salience_ordered, _trigger_encs
-from .runner import _assemble
+from .engine import _salience_ordered
+from .runner import _assemble, _bind, _encoded_sqls
 
 __all__ = ["rule_folder_runner", "add_folder", "fold_and_replace_fields"]
 
@@ -44,7 +44,20 @@ def rule_folder_runner(
 
     ``starting_struct`` may be a Column (e.g. ``F.struct('a', 'b')``) or
     SQL text. Outputs are ``currentResult -> …`` lambdas or
-    ``set(field = expr, …)`` sugar."""
+    ``set(field = expr, …)`` sugar. Inlines each encoded rule, like
+    ``rule_runner``; :func:`add_folder` evaluates each once."""
+    acc = _accumulator(starting_struct, df, debug_mode, use_type)
+    return _fold(suite, _encoded_sqls(suite, df), acc, debug_mode)
+
+
+def _accumulator(
+    starting_struct: Union[Column, str],
+    df: Optional[DataFrame],
+    debug_mode: bool,
+    use_type: Optional[Union[str, T.DataType]],
+) -> Tuple[str, Optional[T.StructType], Optional[str]]:
+    """(starting struct SQL, accumulator schema, its DDL): the schema is
+    ``use_type`` if given, else probed from ``df``."""
     start_sql = (
         starting_struct if isinstance(starting_struct, str) else _sql_of_column(starting_struct)
     )
@@ -70,8 +83,18 @@ def rule_folder_runner(
             "debug_mode needs the accumulator type: pass df= (to probe "
             "it from starting_struct) or use_type="
         )
+    return start_sql, schema, ddl
 
-    enc_by_set = _trigger_encs(suite, df)
+
+def _fold(
+    suite: RuleSuite,
+    enc_by_set: Sequence[Sequence[str]],
+    acc: Tuple[str, Optional[T.StructType], Optional[str]],
+    debug_mode: bool,
+) -> Column:
+    """The folder struct over each rule's encoded SQL: inline text or a
+    staged column reference."""
+    start_sql, schema, ddl = acc
     dq = _assemble(suite, enc_by_set, with_suite_overall=True)
 
     ordered = _salience_ordered(suite, enc_by_set)
@@ -139,9 +162,10 @@ def add_folder(
     debug_mode: bool = False,
     use_type: Optional[Union[str, T.DataType]] = None,
 ) -> DataFrame:
-    return df.select(
-        "*",
-        rule_folder_runner(suite, starting_struct, df, debug_mode, use_type).alias(name),
+    acc = _accumulator(starting_struct, df, debug_mode, use_type)
+    return _bind(
+        df, _encoded_sqls(suite, df),
+        lambda refs: [_fold(suite, refs, acc, debug_mode).alias(name)],
     )
 
 
@@ -157,8 +181,7 @@ def fold_and_replace_fields(
     (reference: impl/util/AddDataFunctionsImports.scala foldAndReplaceFields,
     impl/util/transformers.scala:23-67)."""
     start = F.struct(*[F.col(f) for f in fields])
-    folded = rule_folder_runner(suite, start, df)
-    with_fold = df.select("*", folded.alias(dq_name))
+    with_fold = add_folder(df, suite, start, dq_name)
     # row-level null check: result is NULL iff no rule passed — then the
     # original values stay (a passing rule may still set a field to NULL)
     has_result = F.col(f"{dq_name}.result").isNotNull()

@@ -3,27 +3,23 @@ nested DQ result column.
 
 Reference behavior: impl/RuleRunner.scala:58-189 (custom codegen’d
 expression); here the same result is declared as a single
-``F.struct``/``F.create_map`` tree over per-rule encoded expressions,
-so Catalyst plans/codegens it like any user query. At scale this is a
-pure narrow map — no shuffle, no UDF, fully pushdown/AQE-friendly.
+``named_struct``/``map`` tree over per-rule encoded expressions, so
+Catalyst plans/codegens it like any user query. Binding to a frame
+stages each encoded rule once as a column and assembles the struct
+from references (:func:`_bind`). At scale this is a pure narrow map —
+no shuffle, no UDF, fully pushdown/AQE-friendly.
 """
 
 from __future__ import annotations
 
-from typing import List, Optional, Sequence
+from typing import Callable, List, Optional, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..model import RuleSuite, pack_id
 from ..plans.compiler import expand_rules, probe_types
-from ..results import (
-    encode_rule_sql,
-    encode_rule_sql_generic,
-    overall_result,
-    overall_result_spark_sql,
-    rule_suite_result_type,
-)
+from ..results import encode_rule_sql, encode_rule_sql_generic, overall_result_spark_sql
 
 __all__ = [
     "rule_runner",
@@ -47,16 +43,17 @@ def _encoded_sqls(suite: RuleSuite, df: Optional[DataFrame]) -> List[List[str]]:
         encoded = [encode_rule_sql(s, t) for (_, _, s), t in zip(expanded, dtypes)]
     else:
         encoded = [encode_rule_sql_generic(s) for _, _, s in expanded]
+    return _per_set(encoded, [rs.rules for rs in suite.rule_sets])
+
+
+def _per_set(flat: List[str], shape: Sequence[Sequence]) -> List[List[str]]:
+    """``flat`` cut into consecutive runs as long as each of ``shape``."""
     out: List[List[str]] = []
     i = 0
-    for rs in suite.rule_sets:
-        out.append(encoded[i : i + len(rs.rules)])
-        i += len(rs.rules)
+    for part in shape:
+        out.append(flat[i : i + len(part)])
+        i += len(part)
     return out
-
-
-def _empty_rule_map() -> Column:
-    return F.create_map().cast("map<bigint,int>")
 
 
 def _assemble(
@@ -113,9 +110,12 @@ def rule_runner(suite: RuleSuite, df: Optional[DataFrame] = None) -> Column:
     """Column producing ``ruleSuiteResultType``
     (STRUCT<id BIGINT, overallResult INT, ruleSetResults MAP<…>>).
 
-    Pass ``df`` (the frame the column will be selected on) to get exact
-    type-directed result encoding — the ``add_*`` helpers do this for
-    you. Reference entry: impl/imports/RuleRunnerImports.scala:24.
+    With no frame to stage on, the Column API inlines each encoded rule
+    into the struct text, where the map entry and both overall folds
+    repeat it. The ``add_*`` helpers are the fast path: they evaluate
+    each rule once (:func:`_bind`). Pass ``df`` (the frame the column
+    will be selected on) to get exact type-directed result encoding.
+    Reference entry: impl/imports/RuleRunnerImports.scala:24.
     """
     enc_sqls = _encoded_sqls(suite, df)
     return _assemble(suite, enc_sqls, with_suite_overall=True)
@@ -128,155 +128,101 @@ def rule_runner_details(suite: RuleSuite, df: Optional[DataFrame] = None) -> Col
     return _assemble(suite, enc_sqls, with_suite_overall=False)
 
 
-def flatten_rule_runner(suite: RuleSuite, df: Optional[DataFrame] = None) -> Column:
-    """Fused runner+flatten: ARRAY<STRUCT<ruleSuiteId, ruleSuiteVersion,
-    ruleSuiteResult, ruleSetResult, ruleSetId, ruleSetVersion, ruleId,
-    ruleVersion, ruleResult>> built directly from the per-rule encoded
-    expressions — same rows as ``explode(flatten_results(rule_runner))``
-    but with no intermediate maps and no higher-order functions (HOF
-    lambdas evaluate interpreted; the inline array stays in whole-stage
-    codegen and duplicate rule expressions fall to Catalyst's
-    subexpression elimination).  Use the generic ``flatten_results``
-    macro for DQ structs read back from storage."""
-    enc_sqls = _encoded_sqls(suite, df)
-    encs = [[F.expr(s) for s in set_sqls] for set_sqls in enc_sqls]
-    all_encs = [c for ss in encs for c in ss]
-    suite_overall = overall_result(all_encs, suite.probable_pass).cast("int")
-    structs: List[Column] = []
-    for rs, ss in zip(suite.rule_sets, encs):
-        set_overall = overall_result(list(ss), suite.probable_pass).cast("int")
-        for r, enc in zip(rs.rules, ss):
-            structs.append(
-                F.struct(
-                    F.lit(suite.id.id).cast("int").alias("ruleSuiteId"),
-                    F.lit(suite.id.version).cast("int").alias("ruleSuiteVersion"),
-                    suite_overall.alias("ruleSuiteResult"),
-                    set_overall.alias("ruleSetResult"),
-                    F.lit(rs.id.id).cast("int").alias("ruleSetId"),
-                    F.lit(rs.id.version).cast("int").alias("ruleSetVersion"),
-                    F.lit(r.id.id).cast("int").alias("ruleId"),
-                    F.lit(r.id.version).cast("int").alias("ruleVersion"),
-                    enc.cast("int").alias("ruleResult"),
-                )
-            )
-    return F.array(*structs)
+def _fresh_names(df: DataFrame, prefix: str, n: int) -> List[str]:
+    """``prefix<i>`` for i < n, each with ``_`` appended until no column
+    of ``df`` has the name (case-insensitively, as Spark resolves)."""
+    used = {c.lower() for c in df.columns}
+    names = []
+    for i in range(n):
+        nm = f"{prefix}{i}"
+        while nm.lower() in used:
+            nm += "_"
+        used.add(nm.lower())
+        names.append(nm)
+    return names
+
+
+def _stage(df: DataFrame, sqls: Sequence[str], prefix: str) -> Tuple[DataFrame, List[str]]:
+    """``df`` plus each SQL text as an INT column under a fresh name.
+
+    ONE selectExpr call instead of a py4j F.expr/cast/alias round trip
+    per rule — at 1000 rules that is ~3000 saved JVM calls (measured:
+    the staging projection built 3x faster, identical schema/plan). The
+    encoded SQL is embeddable text by the same invariant _assemble's
+    single-string build already relies on."""
+    names = _fresh_names(df, prefix, len(sqls))
+    staged = df.selectExpr(
+        "*", *[f"CAST(({s}) AS INT) AS `{nm}`" for s, nm in zip(sqls, names)]
+    )
+    return staged, names
+
+
+def _bind(
+    df: DataFrame,
+    enc_sqls: Sequence[Sequence[str]],
+    assemble: Callable[[List[List[str]]], List[Column]],
+) -> DataFrame:
+    """The one way a suite binds to a frame: project every encoded rule
+    once into an INT column (Spark's codegen splits N independent small
+    expressions into many compilable methods), ``assemble`` the result
+    columns from the per-set column REFERENCES, then drop the helpers.
+    Inlined, each rule repeats wherever the result uses it (map entry,
+    both overall folds, engine and folder arms), and past a few hundred
+    rules the struct outgrows what Janino compiles into one method and
+    falls to interpreted projection. CollapseProject leaves the two
+    projections alone because the staged columns are non-cheap and each
+    is referenced more than once. ``*`` and ``drop`` pass the input
+    columns through without parsing their names (``a.b`` stays one
+    column)."""
+    staged, names = _stage(df, [s for ss in enc_sqls for s in ss], "__qs_enc")
+    return staged.select("*", *assemble(_per_set(names, enc_sqls))).drop(*names)
 
 
 def add_flat_rule_results(
     df: DataFrame, suite: RuleSuite, keep: Optional[Sequence[str]] = None
 ) -> DataFrame:
-    """``keep`` columns + one flat row per (input row, rule) — the
-    explode of :func:`flatten_rule_runner`, staged so each rule expression
-    evaluates ONCE into a real column before the struct array is built.
-    Inlining the encoded expressions into all N structs (each of which
-    also embeds the overall folds) makes the generator's child evaluate
-    ~N^2 rule expressions per row; staging keeps it at N."""
-    keep = list(keep if keep is not None else df.columns)
+    """``keep`` columns (default: every input column) + one flat row per
+    (input row, rule): the rows of ``explode(flatten_results(DQ))``
+    built with no intermediate maps and no higher-order functions. The
+    overall folds are staged as columns too: structs made purely of
+    column references explode at generator speed, while embedding the
+    rules and folds in all N structs makes the generator's child
+    evaluate ~N^2 expressions per row."""
     enc_sqls = _encoded_sqls(suite, df)
-    flat_ids = [
-        (rs, r) for rs, ss in zip(suite.rule_sets, enc_sqls) for r in rs.rules
+    staged, names = _stage(df, [s for ss in enc_sqls for s in ss], "__qs_enc")
+    set_refs = _per_set(names, enc_sqls)
+    pp = suite.probable_pass
+    staged, ov_names = _stage(
+        staged,
+        [overall_result_spark_sql(names, pp)]
+        + [overall_result_spark_sql(refs, pp) for refs in set_refs],
+        "__qs_ov",
+    )
+    structs = [
+        "named_struct("
+        f"'ruleSuiteId', {suite.id.id}, 'ruleSuiteVersion', {suite.id.version}, "
+        f"'ruleSuiteResult', {ov_names[0]}, 'ruleSetResult', {set_ov}, "
+        f"'ruleSetId', {rs.id.id}, 'ruleSetVersion', {rs.id.version}, "
+        f"'ruleId', {r.id.id}, 'ruleVersion', {r.id.version}, "
+        f"'ruleResult', {ref})"
+        for rs, refs, set_ov in zip(suite.rule_sets, set_refs, ov_names[1:])
+        for r, ref in zip(rs.rules, refs)
     ]
-    flat_sqls = [s for ss in enc_sqls for s in ss]
-    staged = df.select(
-        *keep, *[F.expr(s).cast("int").alias(f"__e{i}") for i, s in enumerate(flat_sqls)]
+    (f,) = _fresh_names(staged, "__qs_flat", 1)
+    exploded = staged.select(
+        *(["*"] if keep is None else keep),
+        F.explode(F.expr(f"array({', '.join(structs)})")).alias(f),
     )
-    enc_cols = [f"__e{i}" for i in range(len(flat_sqls))]
-    # stage the overalls as columns as well: structs made purely of
-    # column references explode at generator speed, while embedding the
-    # fold CASEs in all N structs re-evaluates them N times per row
-    suite_overall = overall_result_spark_sql(enc_cols, suite.probable_pass)
-    set_ov_cols: List[str] = []
-    set_ov_exprs: List[Column] = []
-    i = 0
-    for si, (rs, ss) in enumerate(zip(suite.rule_sets, enc_sqls)):
-        cols = enc_cols[i : i + len(ss)]
-        set_ov_exprs.append(
-            F.expr(overall_result_spark_sql(cols, suite.probable_pass)).alias(f"__ov{si}")
-        )
-        set_ov_cols.extend([f"__ov{si}"] * len(ss))
-        i += len(ss)
-    staged = staged.select(
-        "*", F.expr(suite_overall).alias("__ovs"), *set_ov_exprs
-    )
-    structs = []
-    for (rs, r), enc_col, so_col in zip(flat_ids, enc_cols, set_ov_cols):
-        structs.append(
-            "named_struct("
-            f"'ruleSuiteId', {suite.id.id}, 'ruleSuiteVersion', {suite.id.version}, "
-            f"'ruleSuiteResult', __ovs, 'ruleSetResult', {so_col}, "
-            f"'ruleSetId', {rs.id.id}, 'ruleSetVersion', {rs.id.version}, "
-            f"'ruleId', {r.id.id}, 'ruleVersion', {r.id.version}, "
-            f"'ruleResult', {enc_col})"
-        )
-    arr = "array(" + ", ".join(structs) + ")"
-    exploded = staged.select(*keep, F.explode(F.expr(arr)).alias("f"))
-    return exploded.select(*keep, "f.*")
-
-
-#: above this many rules the single-projection DQ struct outgrows what
-#: Janino will compile into one method and Spark silently falls back to
-#: INTERPRETED projection — measured at sf0.1: 500 rules 6.8 s
-#: (codegen), 1000 rules 92 s (interpreted), a 8x per-rule cliff. The
-#: staged two-projection shape keeps every generated method small at
-#: any suite size.
-_STAGE_RULES_OVER = 256
-
-
-def _add_staged(
-    df: DataFrame,
-    suite: RuleSuite,
-    enc_sqls: List[List[str]],
-    assemble,
-) -> DataFrame:
-    """Two-projection shape for big suites: project every encoded rule
-    expression into a real INT column (Spark's codegen splits N
-    independent small expressions into many compilable methods), then
-    assemble the DQ struct purely from column REFERENCES. Each rule
-    expression appears ~9x in the one-shot struct SQL (map entry + 3x
-    in each of two fail-folds); staging evaluates it once and shrinks
-    the struct expression to references. CollapseProject leaves the two
-    projections alone because the staged columns are non-cheap and each
-    is referenced 3x."""
-    flat = [s for ss in enc_sqls for s in ss]
-    used = set(df.columns)
-    names = []
-    for i in range(len(flat)):
-        nm = f"__qs_enc{i}"
-        while nm in used:
-            nm += "_"
-        used.add(nm)
-        names.append(nm)
-    # ONE selectExpr call instead of a py4j F.expr/cast/alias round
-    # trip per rule — at 1000 rules that is ~3000 saved JVM calls
-    # (measured: the staging projection built 3x faster, identical
-    # schema/plan). The encoded SQL is embeddable text by the same
-    # invariant _assemble's single-string build already relies on.
-    staged = df.selectExpr(
-        "*",
-        *[f"CAST(({s}) AS INT) AS `{nm}`" for s, nm in zip(flat, names)],
-    )
-    refs: List[List[str]] = []
-    i = 0
-    for ss in enc_sqls:
-        refs.append(names[i : i + len(ss)])
-        i += len(ss)
-    return staged.select(*df.columns, *assemble(refs))
+    return exploded.select("*", f"{f}.*").drop(f, *names, *ov_names)
 
 
 def add_data_quality(
     df: DataFrame, suite: RuleSuite, name: str = "DQ"
 ) -> DataFrame:
     """``df`` plus the nested DQ result column
-    (reference: impl/util/AddDataFunctionsImports.scala:21-60). Suites
-    past _STAGE_RULES_OVER rules take the staged two-projection shape
-    (same values, codegen-friendly at any size)."""
-    enc_sqls = _encoded_sqls(suite, df)
-    if sum(len(s) for s in enc_sqls) <= _STAGE_RULES_OVER:
-        return df.select(
-            "*", _assemble(suite, enc_sqls, True).alias(name)
-        )
-    return _add_staged(
-        df, suite, enc_sqls,
+    (reference: impl/util/AddDataFunctionsImports.scala:21-60)."""
+    return _bind(
+        df, _encoded_sqls(suite, df),
         lambda refs: [_assemble(suite, refs, True).alias(name)],
     )
 
@@ -291,22 +237,19 @@ def add_overall_results_and_details(
     without the suite overall — 30-50% faster post-hoc filtering on
     parquet since the int column predicate pushes down
     (reference: RuleResults.scala:52-57, docs/background/storage_method.md:30)."""
-    enc_sqls = _encoded_sqls(suite, df)
 
-    def build(sqls):
-        flat = [s for set_sqls in sqls for s in set_sqls]
+    def build(refs):
+        flat = [s for set_refs in refs for s in set_refs]
         return [
             F.expr(
                 overall_result_spark_sql(flat, suite.probable_pass)
             ).alias(overall_name),
-            _assemble(suite, sqls, with_suite_overall=False).alias(
+            _assemble(suite, refs, with_suite_overall=False).alias(
                 details_name
             ),
         ]
 
-    if sum(len(s) for s in enc_sqls) <= _STAGE_RULES_OVER:
-        return df.select("*", *build(enc_sqls))
-    return _add_staged(df, suite, enc_sqls, build)
+    return _bind(df, _encoded_sqls(suite, df), build)
 
 
 def add_data_quality_f(suite: RuleSuite, name: str = "DQ"):

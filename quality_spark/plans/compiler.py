@@ -12,8 +12,7 @@ codegen exactly as it would for hand-written DataFrame code.
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-from typing import List, Optional, Sequence, Tuple
+from typing import List, Sequence, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -27,17 +26,8 @@ class RuleCompilationError(ValueError):
     """A rule failed to expand or resolve; carries the rule coordinates."""
 
 
-def registry_for(suite: RuleSuite, extra: Optional[LambdaRegistry] = None) -> LambdaRegistry:
-    reg = LambdaRegistry()
-    if extra is not None:
-        for name in extra.names():
-            for arity in extra.arities(name):
-                params, body = extra.lookup(name, arity)  # type: ignore[misc]
-                from ..model import Id, LambdaFunction
-
-                reg.register(LambdaFunction(name, f"({', '.join(params)}) -> {body}", Id(0, 0)))
-    reg.register_all(suite.lambda_functions)
-    return reg
+def registry_for(suite: RuleSuite) -> LambdaRegistry:
+    return LambdaRegistry().register_all(suite.lambda_functions)
 
 
 def expand_rules(suite: RuleSuite) -> List[Tuple[RuleSet, Rule, str]]:
@@ -64,17 +54,10 @@ def probe_types(df: DataFrame, sqls: Sequence[str]) -> List[T.DataType]:
     try:
         # one selectExpr call: a thousand-rule suite costs ONE py4j
         # round trip instead of one F.expr trip per rule (measured at
-        # dq1000: 1.95 s -> 0.36 s for the probe). Falls back to the
-        # per-Column path for any text the parenthesized AS form cannot
-        # carry (e.g. a trailing line comment swallowing the paren).
+        # dq1000: 1.95 s -> 0.36 s for the probe)
         schema = df.selectExpr(
             *[f"({s}) AS _p{i}" for i, s in enumerate(sqls)]
         ).schema
-        return [f.dataType for f in schema.fields]
-    except Exception:
-        pass
-    try:
-        schema = df.select([F.expr(s).alias(f"_p{i}") for i, s in enumerate(sqls)]).schema
         return [f.dataType for f in schema.fields]
     except Exception:
         types: List[T.DataType] = []

@@ -11,8 +11,9 @@ local plan:
 
 * the suite compiles to encoded per-rule SQL a single time
   (``RowProcessor.__init__``), not per batch;
-* ``process`` ships a batch through Arrow into a local-relation plan —
-  no shuffle, no job scheduling beyond one collect;
+* ``process`` ships a batch through Arrow into a local-relation plan
+  that stages each encoded rule once, like ``add_data_quality`` — no
+  shuffle, no job scheduling beyond one collect;
 * throughput intent mirrors the reference's MutableProjection path:
   amortize compile, stream rows.
 
@@ -26,11 +27,10 @@ from __future__ import annotations
 from typing import Dict, Iterable, List, Mapping, Optional, Sequence, Union
 
 from pyspark.sql import Row, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .model import RuleSuite
-from .operators.runner import rule_runner
+from .operators.runner import _assemble, _bind, _encoded_sqls
 
 __all__ = ["RowProcessor", "DuckDBProcessor", "dq_factory"]
 
@@ -93,13 +93,18 @@ class RowProcessor:
             T._parse_datatype_string(schema) if isinstance(schema, str) else schema
         )
         self.name = name
+        self.suite = suite
         probe = spark.createDataFrame([], self.schema)
-        # compile once; rule_runner's type probing happens here, not per batch
-        self._runner = rule_runner(suite, probe)
+        # compile once: expansion and type probing happen here, and
+        # each batch only stages the encoded rules
+        self._enc_sqls = _encoded_sqls(suite, probe)
 
     def process(self, rows: Iterable[Union[Mapping, Sequence]]) -> List[Row]:
         batch = self.spark.createDataFrame(list(rows), self.schema)
-        return batch.select("*", self._runner.alias(self.name)).collect()
+        return _bind(
+            batch, self._enc_sqls,
+            lambda refs: [_assemble(self.suite, refs, True).alias(self.name)],
+        ).collect()
 
     def process_one(self, row: Union[Mapping, Sequence]) -> Row:
         return self.process([row])[0]

@@ -216,50 +216,140 @@ def test_nan_rule_result_fails(spark):
     assert got[0.0] == 0  # NaN -> Failed, never INT_MAX-pass
 
 
-def test_staged_big_suite_matches_unstaged(lineitem):
-    """The >256-rule staged two-projection shape (round 7: the one-shot
-    struct falls to INTERPRETED projection past ~500 rules — 8x
-    per-rule cliff at 1000) must produce value-identical DQ structs to
-    the one-shot shape, including soft-fail and null encodings."""
-    from quality_spark import rule_suite
-    from quality_spark.operators import runner as runner_mod
-    from quality_spark.operators.runner import (
-        add_data_quality,
-        add_overall_results_and_details,
+def _assert_helpers_match_column_apis(df, n):
+    """Each staged ``add_*`` helper must give value-identical results
+    to its inline Column API on the same frame, including soft-fail
+    and null encodings, and leak no helper column."""
+    from quality_spark import (
+        add_folder,
+        add_rule_engine,
+        engine_rule,
+        engine_suite,
+        rule_engine_runner,
+        rule_folder_runner,
     )
+    from quality_spark.operators.runner import rule_runner_details
+
+    def same(a, b):
+        assert a.columns == b.columns
+        assert sorted(map(str, a.collect())) == sorted(map(str, b.collect()))
 
     cols = ["l_orderkey", "l_partkey", "l_quantity", "l_extendedprice"]
-    rules = []
-    for i in range(300):  # > _STAGE_RULES_OVER -> staged path
-        c = cols[i % len(cols)]
-        rules.append(((1000 + i, 1), f"({c} % {2 + (i % 5)}) >= 0"))
+    triggers = [f"({cols[i % 4]} % {2 + (i % 5)}) = 0" for i in range(n)]
+    rules = [((1000 + i, 1), t) for i, t in enumerate(triggers)]
     rules.append(((2000, 1), "CAST(NULL AS BOOLEAN)"))  # null -> Failed
     rules.append(((2001, 1), "CASE WHEN l_orderkey % 2 = 0 THEN -1 ELSE 1 END"))
-    suite = rule_suite((77, 1), [((1, 1), rules[:150]), ((2, 1), rules[150:])])
-    df = lineitem.limit(200)
+    half = len(rules) // 2
+    suite = rule_suite((77, 1), [((1, 1), rules[:half]), ((2, 1), rules[half:])])
 
-    assert sum(
-        len(rs.rules) for rs in suite.rule_sets
-    ) > runner_mod._STAGE_RULES_OVER
-    staged = add_data_quality(df, suite)
-    # no helper-column leakage: output schema is input + DQ only
-    assert staged.columns == df.columns + ["DQ"]
-    # force the one-shot shape for the same suite
-    orig = runner_mod._STAGE_RULES_OVER
-    runner_mod._STAGE_RULES_OVER = 10**9
-    try:
-        oneshot = add_data_quality(df, suite)
-    finally:
-        runner_mod._STAGE_RULES_OVER = orig
-    a = sorted(map(str, staged.collect()))
-    b = sorted(map(str, oneshot.collect()))
-    assert a == b
+    dq = add_data_quality(df, suite)
+    assert dq.columns == df.columns + ["DQ"]
+    same(dq, df.select("*", rule_runner(suite, df).alias("DQ")))
 
     so = add_overall_results_and_details(df, suite)
     assert so.columns == df.columns + ["DQ_overallResult", "DQ_Details"]
-    runner_mod._STAGE_RULES_OVER = 10**9
-    try:
-        oo = add_overall_results_and_details(df, suite)
-    finally:
-        runner_mod._STAGE_RULES_OVER = orig
-    assert sorted(map(str, so.collect())) == sorted(map(str, oo.collect()))
+    same(
+        so,
+        df.select(
+            "*",
+            rule_runner(suite, df)["overallResult"].alias("DQ_overallResult"),
+            rule_runner_details(suite, df).alias("DQ_Details"),
+        ),
+    )
+
+    # salience reversed against declaration order, so the salient rule
+    # is not simply the first passing one
+    esuite = engine_suite(
+        (78, 1),
+        [((1, 1), [
+            engine_rule((i, 1), t, n - i, f"{cols[i % 4]} + {i}", (5000 + i, 1))
+            for i, t in enumerate(triggers)
+        ])],
+    )
+    same(
+        add_rule_engine(df, esuite, result_ddl="bigint", name="re"),
+        df.select("*", rule_engine_runner(esuite, "bigint", df).alias("re")),
+    )
+
+    fsuite = engine_suite(
+        (79, 1),
+        [((1, 1), [
+            engine_rule((i, 1), t, i, f"set(x = (currentResult.x * 31 + {i}) % 1000003)", (6000 + i, 1))
+            for i, t in enumerate(triggers)
+        ])],
+    )
+    start = F.struct(F.lit(0).cast("bigint").alias("x"))
+    same(
+        add_folder(df, fsuite, start, name="fold"),
+        df.select("*", rule_folder_runner(fsuite, start, df).alias("fold")),
+    )
+
+
+def test_staged_big_suite_matches_unstaged(lineitem):
+    """Past 256 rules (round 7: the inline struct fell to INTERPRETED
+    projection past ~500 rules, an 8x per-rule cliff at 1000)."""
+    _assert_helpers_match_column_apis(lineitem.limit(200), 300)
+
+
+def test_staged_small_suite_matches_unstaged(lineitem):
+    _assert_helpers_match_column_apis(lineitem.limit(200), 40)
+
+
+def test_helper_columns_never_collide(spark):
+    """Input columns with a dotted name and with the names staging
+    helpers use pass through every binding entry point untouched."""
+    from quality_spark import add_folder, add_rule_engine, engine_rule, engine_suite
+    from quality_spark.operators.runner import add_flat_rule_results
+
+    cols = ["a.b", "__e0", "__ovs", "__qs_enc0"]
+    df = spark.createDataFrame(
+        [(1, 2, 3, 4), (-1, 2, 3, 0)],
+        ", ".join(f"`{c}` int" for c in cols),
+    )
+    triggers = ["`a.b` > 0", "__qs_enc0 > 0", "__e0 + __ovs = 5"]
+
+    def suite(output):
+        return engine_suite(
+            (3, 1),
+            [((1, 1), [
+                engine_rule((i, 1), t, i, output.format(10 ** i), (700 + i, 1))
+                for i, t in enumerate(triggers)
+            ])],
+        )
+
+    esuite, fsuite = suite("{}"), suite("set(v = currentResult.v + {})")
+
+    dq = add_data_quality(df, esuite)
+    assert dq.columns == cols + ["DQ"]
+    got = {r["a.b"]: r["DQ"]["overallResult"] for r in dq.collect()}
+    assert got == {1: PASSED_INT, -1: 0}
+
+    re = add_rule_engine(df, esuite, result_ddl="int", name="re")
+    assert re.columns == cols + ["re"]
+    assert {r["a.b"]: r["re"]["result"] for r in re.collect()} == {1: 1, -1: 100}
+
+    fold = add_folder(df, fsuite, F.struct(F.lit(0).alias("v")), name="fold")
+    assert fold.columns == cols + ["fold"]
+    assert {r["a.b"]: r["fold"]["result"]["v"] for r in fold.collect()} == {
+        1: 111, -1: 100
+    }
+
+    flat = add_flat_rule_results(df, esuite)
+    assert flat.columns[:4] == cols and flat.columns[4:] == [
+        "ruleSuiteId", "ruleSuiteVersion", "ruleSuiteResult", "ruleSetResult",
+        "ruleSetId", "ruleSetVersion", "ruleId", "ruleVersion", "ruleResult",
+    ]
+    got = sorted((r["a.b"], r["ruleId"], r["ruleResult"]) for r in flat.collect())
+    assert got == [
+        (-1, 0, 0), (-1, 1, 0), (-1, 2, PASSED_INT),
+        (1, 0, PASSED_INT), (1, 1, PASSED_INT), (1, 2, PASSED_INT),
+    ]
+
+
+def test_trailing_line_comment_rule(spark):
+    """A rule ending in a ``--`` comment compiles: the encoders wrap the
+    text in parentheses, which the comment must not swallow."""
+    df = spark.createDataFrame([(1,), (-1,)], "x int")
+    suite = rule_suite((4, 1), [((1, 1), [((1, 1), "x > 0 -- positive")])])
+    got = {r["x"]: r["DQ"]["overallResult"] for r in add_data_quality(df, suite).collect()}
+    assert got == {1: PASSED_INT, -1: 0}
